@@ -338,7 +338,9 @@ def dedup_paragraphs(
     first."""
     if keep not in ("first", "none"):
         raise ValueError(f"keep must be 'first' or 'none', got {keep!r}")
-    paras = F.split(F.col(text_col), sep)
+    # split on `sep` as a literal, as it is re-joined below (F.split
+    # takes a Java regex; \Q...\E quotes it, as Pattern.quote does)
+    paras = F.split(F.col(text_col), "\\Q" + sep.replace("\\E", "\\E\\\\E\\Q") + "\\E")
     base = df.select(F.col(id_col), F.col(text_col), paras.alias("_ps"))
     occ = (
         base.filter(F.col(id_col).isNotNull())

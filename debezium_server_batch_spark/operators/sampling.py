@@ -60,13 +60,16 @@ def hash_sample(
         raise ValueError("pass exactly one of fraction= or rates= (+ stratum_col)")
     h = F.substring(F.md5(F.col(key_col).cast("string")), 1, 8)
     if fraction is not None:
-        return df.filter(h < F.lit(hash_threshold(fraction)))
-    if stratum_col is None:
+        thr = F.lit(hash_threshold(fraction))
+    elif stratum_col is None:
         raise ValueError("rates= requires stratum_col=")
-    thr = F.lit(hash_threshold(default_rate))
-    for value, rate in sorted(rates.items()):
-        thr = F.when(F.col(stratum_col) == value, F.lit(hash_threshold(rate))).otherwise(thr)
-    return df.filter(h < thr)
+    else:
+        thr = F.lit(hash_threshold(default_rate))
+        for value, rate in sorted(rates.items()):
+            thr = F.when(F.col(stratum_col) == value, F.lit(hash_threshold(rate))).otherwise(thr)
+    # a null key has no hash: only a full rate (threshold "g") keeps it,
+    # since a full rate keeps every row
+    return df.filter(F.coalesce(h < thr, thr == F.lit(hash_threshold(1.0))))
 
 
 def global_running_total(

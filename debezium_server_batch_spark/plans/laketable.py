@@ -654,20 +654,36 @@ class LakeTable:
             df = df.filter(~F.coalesce(F.col("__deleted").cast("boolean"), F.lit(False)))
         return df
 
-    def _collapse(self, df: DataFrame, snap: dict) -> DataFrame:
+    def _collapse(self, df: DataFrame, snap: dict, rank: str | None = None) -> DataFrame:
         """LWW per key over order_by — groupBy + max(struct), which Spark
-        executes with map-side partial aggregation (skew-safe)."""
+        executes with map-side partial aggregation (skew-safe). `rank`
+        names a tie-break column compared after order_by and before the
+        row itself; it is dropped from the output."""
         keys = self._key_cols(snap)
-        order = [c for c in snap["order_by"] if c in df.columns]
+        cols = [c for c in df.columns if c != rank]
+        order = [c for c in snap["order_by"] if c in cols] + ([rank] if rank else [])
         if not order:
             return df
-        payload = F.struct(*[F.col(c) for c in df.columns]).alias("_row")
-        cols = df.columns
+        payload = F.struct(*[F.col(c) for c in cols]).alias("_row")
         return (
             df.groupBy(*keys)
             .agg(F.max(F.struct(*[F.col(c) for c in order], payload)).alias("_m"))
             .select(*[F.col(f"_m._row.{c}").alias(c) for c in cols])
         )
+
+    def _lww_upsert(self, base: DataFrame, incoming: DataFrame, snap: dict) -> DataFrame:
+        """Order-guarded upsert of `incoming` onto `base` (both conformed
+        to one schema) as ONE shuffle-aggregate: their union collapsed
+        per key on (order_by..., source rank, row). The newest order
+        tuple wins and `incoming` wins ties with `base` — MERGE's
+        `s.order >= t.order`, so replaying a stale batch is a no-op;
+        ties inside `incoming` resolve on the row, as in read(). Rows
+        whose leading key is null are dropped: they upsert nothing."""
+        both = base.withColumn("_lww_src", F.lit(0)).unionByName(
+            incoming.withColumn("_lww_src", F.lit(1))
+        )
+        lead = self._key_cols(snap)[0]
+        return self._collapse(both.filter(F.col(lead).isNotNull()), snap, rank="_lww_src")
 
     def read_keys(self, keys: list, version: int | None = None) -> DataFrame:
         """Point lookup: current live rows for the given key values.
@@ -869,7 +885,10 @@ class LakeTable:
     ) -> dict[str, list[dict]]:
         """Write df bucketed by key (and optionally day-partitioned by
         the table's partition_ts_col) into a fresh commit dir; return
-        the per-bucket file manifest with row counts.
+        the per-bucket file manifest with row counts and leading-key
+        [kmin, kmax] zone maps. Local commits of at most
+        MAX_DRIVER_FOOTER_FILES files take both from the parquet
+        footers on the driver; others run one distributed metadata scan.
 
         cluster_by_key=True (compaction/rewrite paths — Iceberg's
         sorted rewrite_data_files): instead of the hash salt, rows are
@@ -972,22 +991,17 @@ class LakeTable:
         # r7 fast path: LOCAL paths with few files read their footers on
         # the driver (~1 ms/file) instead of paying a Spark job
         # (~0.3-0.5 s fixed cost per micro-batch write). Zone maps come
-        # from footer statistics ONLY for integral keys, where parquet
-        # stats are exact; string/float keys keep the distributed
-        # min/max aggregate (parquet may truncate string stats — a
-        # truncated bound is sound for pruning but would diverge from
-        # the aggregate the manifest always recorded). Remote stores and
-        # big commits keep the distributed scan.
-        key_dtype = self.schema(snap)[key0].dataType if key0 in [f.name for f in self.schema(snap).fields] else None
-        zone_by_footer = isinstance(
-            key_dtype, (T.IntegerType, T.LongType, T.ShortType, T.ByteType)
-        )
+        # from footer statistics for integral and string keys: parquet-mr
+        # writes their min/max exactly (strings untruncated, compared as
+        # unsigned bytes like Spark's min/max) and omits them only for
+        # values over 4 KB — such a file gets no zone and is never
+        # pruned. Float/double/boolean keys keep the distributed min/max
+        # aggregate, as do remote stores and big commits.
+        schema = self.schema(snap)
+        key_dtype = schema[key0].dataType if key0 in schema.fieldNames() else None
+        zone_by_footer = isinstance(key_dtype, self._FOOTER_ZONE_TYPES)
         local = self._local_footer_entries(out_dir, key0 if zone_by_footer else None)
-        if local is not None and (zone_by_footer or key_dtype is None or not isinstance(
-            key_dtype,
-            (T.IntegerType, T.LongType, T.ShortType, T.ByteType, T.StringType,
-             T.FloatType, T.DoubleType, T.BooleanType),
-        )):
+        if local is not None and (zone_by_footer or not isinstance(key_dtype, self._ZONE_TYPES)):
             for path, rows, parts, zone in local:
                 rel = os.path.relpath(path, _uri_to_local(self.root))
                 entry = {"path": rel, "rows": rows, "schema_id": schema_id}
@@ -1005,19 +1019,7 @@ class LakeTable:
         # python scalars — anything else (date/timestamp/decimal/binary/
         # complex) must not even pay the key-column read in the metadata
         # scan, since its result would be discarded
-        with_zone = key0 in back.columns and isinstance(
-            back.schema[key0].dataType,
-            (
-                T.StringType,
-                T.IntegerType,
-                T.LongType,
-                T.ShortType,
-                T.ByteType,
-                T.FloatType,
-                T.DoubleType,
-                T.BooleanType,
-            ),
-        )
+        with_zone = key0 in back.columns and isinstance(back.schema[key0].dataType, self._ZONE_TYPES)
         if with_zone:
             aggs += [F.min(key0).alias("_kmin"), F.max(key0).alias("_kmax")]
         counts = (
@@ -1041,12 +1043,17 @@ class LakeTable:
     # goes back to the distributed metadata scan (the driver crawl would
     # serialize the commit; see _write_files_once)
     MAX_DRIVER_FOOTER_FILES = 256
+    # leading-key types that get a [kmin, kmax] zone map, and the subset
+    # whose zone the driver-side footer crawl reads exactly
+    _FOOTER_ZONE_TYPES = (T.StringType, T.IntegerType, T.LongType, T.ShortType, T.ByteType)
+    _ZONE_TYPES = _FOOTER_ZONE_TYPES + (T.FloatType, T.DoubleType, T.BooleanType)
 
     def _local_footer_entries(self, out_dir: str, zone_key: str | None = None):
         """Parquet footers of a just-written LOCAL output dir, read on
         the driver: [(abs_path, rows, partition_values, zone)] sorted by
         path, where zone is (min, max) of `zone_key` from footer
-        statistics (exact for integral types) or None. Returns None —
+        statistics (exact for integral and string types) or None, also
+        when a row group omits them. Returns None —
         caller falls back to the distributed metadata scan — when the
         path is on a remote store or holds more than
         MAX_DRIVER_FOOTER_FILES files."""
@@ -1116,51 +1123,55 @@ class LakeTable:
             return []
         return [st.getPath().getName() for st in fs.listStatus(path)]
 
-    def _write_delta_files_once(self, df: DataFrame, schema_id: str, codec: str = "snappy") -> dict:
+    def _write_delta_files_once(
+        self, df: DataFrame, snap: dict, schema_id: str, codec: str = "snappy"
+    ) -> dict:
         """MAP-ONLY delta write (unbucketed MoR layout): no repartition,
         no partitionBy — the ingest pipeline stays shuffle-free end to
         end (scan → parse → write), one transient file per upstream
         task. Files go under the pseudo-bucket "*" (relevant to every
-        bucket until compact() folds them into the real layout)."""
+        bucket until compact() folds them into the real layout).
+
+        An observation on the written frame collects the buckets its
+        keys hash to, at no extra job. Each entry records the bucket
+        count that set was computed under (`touched_of`) and, when the
+        write missed some buckets, the set itself (`touched`) — so the
+        fold rewrites only those buckets (see _compact_deltas_once)."""
+        from pyspark.sql import Observation
+
         commit_id = uuid.uuid4().hex
         out_dir = os.path.join(self.root, self.DATA, commit_id)
-        w = df.write.mode("overwrite")
+        obs = Observation()
+        w = df.observe(obs, F.collect_set(self._bucket_expr(snap)).alias("b")).write.mode("overwrite")
         if codec:
             w = w.option("compression", codec)
         w.parquet(out_dir)
         if not any(f.endswith(".parquet") for f in self._data_fs_names(out_dir)):
             return {}
+        n = snap["num_buckets"]
+        touched = sorted(obs.get["b"])
+        extra = {"touched_of": n, **({"touched": touched} if len(touched) < n else {})}
         # r7: local few-file delta commits read row counts from parquet
         # footers on the driver (exact; no zone maps on the delta path)
         # instead of a Spark job — see _write_files_once
         local = self._local_footer_entries(out_dir)
         if local is not None:
-            entries = [
-                {
-                    "path": os.path.relpath(path, _uri_to_local(self.root)),
-                    "rows": rows,
-                    "schema_id": schema_id,
-                }
-                for path, rows, _parts, _zone in local
-            ]
-            return {"*": entries}
-        counts = (
-            self.spark.read.parquet(out_dir)
-            .groupBy(F.col("_metadata.file_path").alias("_path"))
-            .count()
-            .collect()
-        )
-        entries = []
-        for r in counts:
-            entries.append(
-                {
-                    "path": os.path.relpath(_uri_to_local(r["_path"]), self.root),
-                    "rows": r["count"],
-                    "schema_id": schema_id,
-                }
+            files = [(path, rows) for path, rows, _parts, _zone in local]
+        else:
+            counts = (
+                self.spark.read.parquet(out_dir)
+                .groupBy(F.col("_metadata.file_path").alias("_path"))
+                .count()
+                .collect()
             )
-        entries.sort(key=lambda e: e["path"])
-        return {"*": entries}
+            files = sorted((_uri_to_local(r["_path"]), r["count"]) for r in counts)
+        root = _uri_to_local(self.root)
+        return {
+            "*": [
+                {"path": os.path.relpath(path, root), "rows": rows, "schema_id": schema_id, **extra}
+                for path, rows in files
+            ]
+        }
 
     def _evolve_for(self, snap: dict, incoming: T.StructType) -> tuple[dict, T.StructType, str]:
         """Evolve the snapshot's schema catalog for an incoming batch
@@ -1354,7 +1365,6 @@ class LakeTable:
     def merge(
         self,
         batch: DataFrame,
-        deleted_col: str = "__deleted",
         checkpoint: dict | None = None,
         lineage: list[dict] | None = None,
         rows_hint: int | None = None,
@@ -1362,14 +1372,14 @@ class LakeTable:
     ) -> int:
         """MERGE INTO (upsert) — the north_rule core.
 
-        `batch` must carry ≤1 row per key (pre-deduped by operators.dedup)
-        plus the order_by columns. Semantics per key, equivalent to:
+        `batch` carries the order_by columns. Semantics per key,
+        equivalent to:
 
             MERGE INTO t USING s ON t.key = s.key
             WHEN MATCHED AND s.order >= t.order THEN UPDATE SET *   -- incl. tombstones
             WHEN NOT MATCHED THEN INSERT *                          -- incl. tombstones
 
-        Deletes become *retained tombstone rows* (``deleted_col`` true)
+        Deletes become *retained tombstone rows* (``__deleted`` true)
         that `read()` filters out. Retention is what makes replaying ANY
         stale batch a no-op — not just a suffix: without a tombstone, a
         replayed pre-delete upsert would resurrect the key. Combined with
@@ -1378,10 +1388,15 @@ class LakeTable:
         `purge_tombstones()` reclaims space once replay beyond the
         checkpoint horizon is impossible.
 
-        Physical plan: bucket-pruned copy-on-write. Only buckets present
-        in the batch are read and rewritten; the join runs with both
-        sides hash-clustered on the key (the batch side is shuffled once;
-        AQE handles residual skew).
+        `s.order` is the table's order_by tuple; of several batch rows
+        of one key the newest counts, ties broken on the row as in read().
+
+        Physical plan, copy-on-write: only the buckets present in the
+        batch are read and rewritten, and the batch is upserted onto
+        them by ONE shuffle-aggregate (_lww_upsert — the same plan the
+        merge-on-read fold runs), skew-safe through map-side partial
+        aggregation. Merge-on-read: the batch is appended as delta files
+        (see create()).
 
         Concurrency: MoR merges are additive and rebase automatically on
         a lost commit race. A CoW merge is a rewrite — on
@@ -1391,23 +1406,19 @@ class LakeTable:
         plan and re-executes deterministically on retry.
         """
         return self._retry_concurrent(
-            lambda: self._merge_once(batch, deleted_col, checkpoint, lineage, rows_hint, validate),
+            lambda: self._merge_once(batch, checkpoint, lineage, rows_hint, validate),
             "merge",
         )
 
     def _merge_once(
         self,
         batch: DataFrame,
-        deleted_col: str,
         checkpoint: dict | None,
         lineage: list[dict] | None,
         rows_hint: int | None,
         validate,
     ) -> int:
         snap = self.snapshot()
-        keys = self._key_cols(snap)
-        order_by = [c for c in snap["order_by"] if c != deleted_col]
-
         batch_logical = T.StructType([f for f in batch.schema.fields if f.name != "_bucket"])
         schemas, evolved, sid = self._evolve_for(snap, batch_logical)
 
@@ -1419,7 +1430,7 @@ class LakeTable:
             # Unbucketed layout additionally skips the repartition
             # shuffle: the whole ingest is map-only.
             if snap.get("delta_layout", "bucketed") == "unbucketed":
-                new_files = self._write_delta_files(conform(batch, evolved), sid)
+                new_files = self._write_delta_files(conform(batch, evolved), snap, sid)
             else:
                 new_files = self._write_files(
                     conform(batch, evolved), snap, sid, rows_hint=rows_hint, codec="snappy"
@@ -1454,10 +1465,7 @@ class LakeTable:
         target = conform(
             self._read_raw(version=snap["version"], buckets=[int(b) for b in affected]), evolved
         )
-        source = conform(batch, evolved)
-
-        merged = self._cow_combine(target, source, keys, order_by, evolved)
-
+        merged = self._lww_upsert(target, conform(batch, evolved), snap)
         new_files = self._write_files(merged, snap, sid)
         # validated rebase: a concurrent commit that only ADDED files
         # (or rewrote OTHER buckets — disjoint CoW merges commute) keeps
@@ -1476,36 +1484,6 @@ class LakeTable:
             current_schema_id=sid,
             checkpoint=checkpoint,
             lineage=lineage,
-        )
-
-    @staticmethod
-    def _cow_combine(target: DataFrame, source: DataFrame, keys: list[str], order_by: list[str], out_schema: T.StructType) -> DataFrame:
-        """Order-guarded upsert combine: full-outer join on the key(s),
-        source wins when present and its order_by tuple is >= the
-        target's (so replaying a stale batch is a no-op). Both sides must
-        be ≤1 row per key and conformed to out_schema."""
-        s_order = F.struct(*[F.col(f"_s.{c}") for c in order_by])
-        t_order = F.struct(*[F.col(f"_t.{c}") for c in order_by])
-        s_present = F.col(f"_s.{keys[0]}").isNotNull()
-        t_present = F.col(f"_t.{keys[0]}").isNotNull()
-        newer = s_present & (~t_present | (s_order >= t_order))
-        keep_s = newer
-        keep_t = t_present & ~newer
-
-        on = None
-        for k in keys:
-            cond = F.col(f"_t.{k}") == F.col(f"_s.{k}")
-            on = cond if on is None else (on & cond)
-        return (
-            target.alias("_t")
-            .join(source.alias("_s"), on, "full_outer")
-            .filter(keep_s | keep_t)
-            .select(
-                *[
-                    F.when(keep_s, F.col(f"_s.{f.name}")).otherwise(F.col(f"_t.{f.name}")).alias(f.name)
-                    for f in out_schema.fields
-                ]
-            )
         )
 
     # ------------------------------------------------------------------
@@ -1730,7 +1708,16 @@ class LakeTable:
         full-table rewrite; this is the Iceberg/Hudi minor-compaction
         equivalent. Dispatches on the persisted delta layout: unbucketed
         deltas live under the '*' pseudo-bucket; bucketed deltas are
-        folded per multi-file bucket (_fold_bucketed). No-op when no
+        folded per multi-file bucket (_fold_bucketed).
+
+        An unbucketed fold is one shuffle-aggregate and one write, with
+        no side job: the touched buckets come from the bucket sets the
+        delta writes recorded (the commit summary says
+        `affected_from: "recorded"`, or `"all"` when some delta carried
+        no usable set and every bucket was read), deltas and base rows
+        are LWW-collapsed together with deltas winning order ties
+        (_lww_upsert), and the new files' row counts and zone maps come
+        from their footers on local stores. No-op when no
         deltas are outstanding. Auto-retries on a lost commit race
         (recompute-from-current, see _retry_concurrent) — a compactor
         racing a live MoR appender converges instead of failing the
@@ -1758,19 +1745,21 @@ class LakeTable:
                 # unboundedly)
                 return self._fold_bucketed(snap, sort)
             return snap["version"]
-        current = self.schema(snap)
-        keys = self._key_cols(snap)
-        order_by = [c for c in snap["order_by"] if c in [f.name for f in current.fields]]
-
-        deltas = self._collapse(self._read_entries(star, snap), snap)
-        affected = {
-            str(r[0]) for r in deltas.select(self._bucket_expr(snap).alias("_b")).distinct().collect()
-        }
-        base_entries = [
-            f for b, files in snap["buckets"].items() if b in affected for f in files
-        ]
-        target = self._read_entries(base_entries, snap)
-        merged = self._cow_combine(target, deltas, keys, order_by, current)
+        # which buckets the deltas touch, from metadata: each delta entry
+        # carries the bucket set its write observed and the bucket count
+        # it was computed under. A missing set, or one computed under
+        # another count (written before the field existed, or rebased
+        # onto a rescale), means every bucket.
+        n = snap["num_buckets"]
+        recorded = all(f.get("touched_of") == n for f in star)
+        if recorded and all("touched" in f for f in star):
+            affected = {str(b) for f in star for b in f["touched"]}
+        else:
+            affected = {b for b in snap["buckets"] if b != "*"}
+        base_entries = [f for b in sorted(affected) for f in snap["buckets"].get(b, [])]
+        merged = self._lww_upsert(
+            self._read_entries(base_entries, snap), self._read_entries(star, snap), snap
+        )
         # rows_hint (manifest row counts, an upper bound) caps the
         # salted writer fan-out — an unhinted fold shatters small
         # outputs into 2P files across bucket×day dirs
@@ -1798,6 +1787,9 @@ class LakeTable:
                 "operation": "compact-deltas",
                 "delta_files": len(star),
                 "affected_buckets": sorted(int(b) for b in affected),
+                # "all": some delta carried no usable bucket set, so the
+                # fold read every bucket (the degraded path)
+                "affected_from": "recorded" if recorded else "all",
             },
         )
 

@@ -11,8 +11,8 @@ event log:
         for each (destination, schema) group in offset order:
             df = normalize(group)                     (P1-P3)
             df = to_page_row(df)                      (warc_ts_ms → ts)
-            df = lww_agg(df, key)                     (dedup §2.7)
-            table.merge(df, checkpoint on last group) (W1/W5-W9 → MERGE)
+            table.merge(df, checkpoint on last group) (W1/W5-W9 → MERGE,
+                                                       LWW per key, §2.7)
         pace(batch_size_wait)                         (F1-F3)
 
 Exactly-once: the offset checkpoint commits atomically inside the same
@@ -116,9 +116,12 @@ class PipelineConfig:
     # while folds get geometrically rarer as the table outgrows a
     # batch. When the log drains, run() folds any remainder (the
     # maintenance a daemon would do in the idle window), so the table
-    # ends read-optimized without a trailing-deltas cliff.
+    # ends read-optimized without a trailing-deltas cliff. A fold is
+    # three Spark jobs (one shuffle-aggregate over the deltas and the
+    # buckets they touch, then the write): on a small tailing table it
+    # is fixed cost that every drained run() pays once.
     auto_compact_rows_factor: float = 3.0
-    prededup: bool = False  # force per-batch LWW before a MoR merge (CoW always dedups)
+    prededup: bool = False  # force per-batch LWW before the merge (which collapses either way)
     # event-time day partitioning of the target table (days(warc_ts)
     # alongside bucket(url)); None disables
     partition_ts_col: str | None = "warc_ts"
@@ -850,21 +853,18 @@ class CdcPipeline:
                 }
             table = self._table(schema=df.schema, destination=g.destination, key=key)
             table_snap = table.snapshot()
-            # dispatch on the TABLE's persisted merge_mode and key, not
-            # the config: resuming a cow table with a mor config would
-            # skip the pre-merge LWW the CoW full-outer merge relies on
-            # (duplicate key rows would land); cfg.merge_mode/key_col
-            # only matter at table creation
+            # the TABLE's persisted key, not the config: cfg.key_col only
+            # matters at table creation
             table_key = table_snap["key_col"]
-            table_mode = table_snap.get("merge_mode")
             valid, dead_obs = self._guard_merge_keys(df, table_key)
-            if table_mode == "mor" and not self.cfg.prededup:
-                # MoR read-collapse already implements LWW per key over
-                # base+delta; a pre-merge dedup shuffle would be pure
-                # overhead (it only shrinks the delta a hot batch writes)
-                deduped = valid
-            else:
-                deduped = lww_agg(valid, key=table_key, order_by=self.cfg.order_by)
+            # merge LWW-collapses several rows of a key itself (MoR on
+            # read and fold, CoW in its upsert aggregate); a pre-merge
+            # dedup shuffle only shrinks the delta a hot batch writes
+            deduped = (
+                lww_agg(valid, key=table_key, order_by=self.cfg.order_by)
+                if self.cfg.prededup
+                else valid
+            )
 
             is_last = gi == last_group_idx[roots[gi]] and not ckpt_barrier
 

@@ -581,10 +581,9 @@ def test_single_table_checkpoint_rides_globally_last_group(spark, tmp_path):
 
 
 def test_resume_respects_table_merge_mode(spark, tmp_path):
-    """The pre-merge dedup decision must follow the TABLE's persisted
-    merge_mode, not the session config: resuming a CoW table under a MoR
-    config would feed multi-row-per-key batches into the CoW full-outer
-    merge and land duplicate key rows."""
+    """Resuming a CoW table under a MoR config keeps the TABLE's
+    persisted merge_mode, and a batch holding several versions of a key
+    (no pre-merge dedup) lands one row per key: the LWW winner."""
     log = str(tmp_path / "log")
     _mk_flat_log(spark, log, [
         (0, "testc.db.p", "c", "k1", 0, "v0"),

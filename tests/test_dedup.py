@@ -228,3 +228,17 @@ def test_decontaminate_semantics(spark):
     q.collect()
     plan = q._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan  # benchmark side broadcast, corpus map-only probe
+
+
+def test_dedup_paragraphs_sep_is_literal(spark):
+    """`sep` splits and re-joins as the same LITERAL string: a separator
+    holding regex metacharacters ('|', '.') must not be read as a
+    pattern on the split side only."""
+    df = spark.createDataFrame(
+        [(0, "intro|Subscribe now|a.b"), (1, "other|Subscribe now|axb")], "doc_id long, text string"
+    )
+    out = {r["doc_id"]: (r["clean_text"], r["n_dropped"]) for r in dedup_paragraphs(df, sep="|").collect()}
+    assert out == {0: ("intro|Subscribe now|a.b", 0), 1: ("other|axb", 1)}
+    dots = spark.createDataFrame([(0, "x. y. z"), (1, "w. y. v")], "doc_id long, text string")
+    out = {r["doc_id"]: r["clean_text"] for r in dedup_paragraphs(dots, sep=". ").collect()}
+    assert out == {0: "x. y. z", 1: "w. v"}

@@ -198,3 +198,18 @@ def test_global_running_total_stratified_matches_window(spark):
                 ).collect()
             )
             assert got == ref, (in_parts, p)
+
+
+def test_hash_sample_full_rate_keeps_null_keys(spark):
+    """A full rate keeps EVERY row, null keys included (md5(NULL) is
+    NULL, so a bare `h < threshold` dropped them even at 1.0); below a
+    full rate a null key has no hash and is never drawn."""
+    df = spark.createDataFrame(
+        [(1, "en"), (None, "en"), (3, "de"), (None, "de")], "doc_id long, lang string"
+    )
+    assert hash_sample(df, "doc_id", fraction=1.0).count() == 4
+    assert hash_sample(df, "doc_id", fraction=0.999).filter(F.col("doc_id").isNull()).count() == 0
+    out = hash_sample(df, "doc_id", stratum_col="lang", rates={"en": 1.0}, default_rate=0.0)
+    assert sorted((r["doc_id"] is None, r["lang"]) for r in out.collect()) == [
+        (False, "en"), (True, "en")
+    ]
